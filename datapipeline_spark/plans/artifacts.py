@@ -303,12 +303,16 @@ def build_artifacts(
 
     results: dict[str, BuildResult] = {}
     hashes: dict[str, str] = {}
-    frames: dict[str, DataFrame] = {}
 
+    # an upstream artifact is read from the store only when a dependent
+    # producer runs: a fresh artifact is never opened (each parquet open is
+    # a schema-inference job)
     producers: dict[str, Callable[[], DataFrame]] = {
         SERIES: lambda: _build_series(compiled),
-        METADATA: lambda: _build_metadata(compiled, frames[SERIES]),
-        COVERAGE_STATS: lambda: _build_coverage(compiled, frames[METADATA]),
+        METADATA: lambda: _build_metadata(compiled, store.read(compiled, SERIES)),
+        COVERAGE_STATS: lambda: _build_coverage(
+            compiled, store.read(compiled, METADATA)
+        ),
         SCALER: lambda: _build_scaler(compiled),
         TICKS: lambda: _build_ticks(compiled),
     }
@@ -320,10 +324,7 @@ def build_artifacts(
         manifest = store.manifest(key)
         if not force and manifest is not None and manifest.get("fingerprint") == fp:
             results[key] = BuildResult(key, store.root / key, fp, skipped=True)
-            frames[key] = store.read(compiled, key)
             continue
-        df = producers[key]()
-        path = store.write(key, df, fp)
-        frames[key] = store.read(compiled, key)
+        path = store.write(key, producers[key](), fp)
         results[key] = BuildResult(key, path, fp, skipped=False)
     return results

@@ -3,9 +3,11 @@ postprocess → split/scale → fold outputs.
 
 Reference lifecycle (pipelines/dataset/pipeline.py:69-246): assemble samples
 from the series artifact, label splits, fit/apply leakage-free per-fold
-scalers, run the fixed postprocess order, route folds. Here every step is a
-lazy DataFrame transformation; fold outputs are filters over one labeled
-plan, so Spark computes the expensive pivot once and fans out the writes.
+scalers, run the fixed postprocess order, route folds. The long series frame
+(the reference's series cache) is materialized ONCE per build with an eager
+localCheckpoint; the id/multiplicity/window probes are one aggregation over
+it, and every later step (pivot, lattice, scaler fit, fold writes) is a lazy
+transformation reading it. Fold outputs are filters over one labeled plan.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from datapipeline_spark.dataset.postprocess import (
@@ -60,12 +62,65 @@ def _long_frame(
     return long_df.withColumn("base_id", F.lit(spec.id))
 
 
-def _series_ids(long_df: DataFrame) -> list[str]:
-    """Distinct encoded ids for the pivot list. Tiny metadata-style scan at
-    plan-build time (the reference reads the same set from its series
-    artifact manifest); at 100 TB this comes from the metadata artifact
-    instead — see plans/artifacts.py."""
-    return sorted(r[0] for r in long_df.select("series_id").distinct().collect())
+def _union_all(frames: list[DataFrame]) -> DataFrame | None:
+    out = None
+    for f in frames:
+        out = f if out is None else out.unionByName(f)
+    return out
+
+
+def _materialize(frames: list[DataFrame]) -> DataFrame | None:
+    """UNION ALL of long frames, materialized once (the reference's series
+    cache). An eager localCheckpoint rather than cache(): it truncates the
+    lineage, so every downstream plan (probe, pivot, lattice, scaler fit,
+    each fold write) analyzes and plans over a leaf `Scan ExistingRDD`
+    instead of re-running the stream graph (floor_time → collapse → fill →
+    rolling, broadcast joins) per consumer. It is also the single code path
+    for every caller of `_build`, where reading the on-disk series artifact
+    would only exist under artifact_mode AUTO|FORCE. The blocks are released
+    by Spark's ContextCleaner once the frame is unreachable."""
+    out = _union_all(frames)
+    return None if out is None else out.localCheckpoint(eager=True)
+
+
+def _series_probe(
+    longs: list[DataFrame], cadence: str, keys: Sequence[str]
+) -> list[Row]:
+    """Per series id (with its base id): min/max bucket multiplicity (`lo`,
+    `hi`: observations per (bucket, *keys) cell) and first/last observed
+    bucket. ONE grouped aggregation over the materialized long frames
+    replaces the id, multiplicity and window-bounds probes; the result is
+    id-domain sized, sorted by series id."""
+    slim = _union_all(
+        [
+            long_df.select(
+                floor_time_expr("time", cadence).alias("bucket"),
+                *keys,
+                "series_id",
+                "base_id",
+            )
+            for long_df in longs
+        ]
+    )
+    rows = (
+        slim.groupBy("bucket", *keys, "series_id", "base_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("series_id", "base_id")
+        .agg(
+            F.min("n").alias("lo"),
+            F.max("n").alias("hi"),
+            F.min("bucket").alias("first"),
+            F.max("bucket").alias("last"),
+        )
+        .collect()
+    )
+    return sorted(rows, key=lambda r: r["series_id"])
+
+
+def _series_ids(probe: list[Row]) -> list[str]:
+    """Sorted encoded ids for the pivot list, read off the series probe (the
+    reference reads the same set from its series artifact manifest)."""
+    return sorted(r["series_id"] for r in probe)
 
 
 @dataclass
@@ -76,6 +131,7 @@ class DatasetBuild:
     column_base: dict[str, str]  # wide column → base feature/target id
     scaler_stats: DataFrame | None  # (fold?, base_id, mean, std, count)
     fold_plan: dict[str, dict[str, list[str]]]  # fold → role → labels
+    scaled_bases: set[str]  # base ids with `scale: true`
 
     def outputs(self) -> dict[tuple[str, str], DataFrame]:
         """(fold, role) → scaled frame; single-fold 'all/full' when no split."""
@@ -97,15 +153,16 @@ class DatasetBuild:
         stats = self.scaler_stats
         if fold is not None:
             stats = stats.filter(F.col("fold") == fold).drop("fold")
-        scaled_cols = [c for c, b in self.column_base.items() if b in self._scaled_bases]
+        scaled_cols = [c for c, b in self.column_base.items() if b in self.scaled_bases]
         if not scaled_cols:
             return df
         # stats are keyed by FULL series id — partitioned columns each scale
         # with their own statistics (reference vector/scaler.py:144-151:
         # selection by base_id, lookup by vector_id); stats are tiny
         rows = {r["series_id"]: r for r in stats.collect()}
-        out = df
         dtypes = dict(df.dtypes)
+        # one projection: each column is rewritten once, from its own input
+        scaled: dict[str, Column] = {}
         for col in scaled_cols:
             r = rows.get(col)
             if r is None:
@@ -114,13 +171,11 @@ class DatasetBuild:
             if dtypes[col].startswith("array"):
                 # elementwise with null passthrough (reference
                 # transforms/vector/scaler.py:82-175 list handling)
-                scaled = F.transform(F.col(col), lambda x: (x - mean) / std)
+                value = F.transform(F.col(col), lambda x: (x - mean) / std)
             else:
-                scaled = (F.col(col) - mean) / std
-            out = out.withColumn(col, F.when(F.col(col).isNotNull(), scaled))
-        return out
-
-    _scaled_bases: set[str] = None  # populated by build_dataset
+                value = (F.col(col) - mean) / std
+            scaled[col] = F.when(F.col(col).isNotNull(), value)
+        return df.withColumns(scaled) if scaled else df
 
 
 def build_dataset(
@@ -132,33 +187,27 @@ def build_dataset(
     return _build(compiled, cfg, window_mode=window_mode)
 
 
-def _window_clip(wide, cadence, spec_longs, window_mode: str):
+def _window_clip(wide: DataFrame, probe: list[Row], window_mode: str) -> DataFrame:
     """Clip samples to the metadata window (reference operations/artifacts/
     metadata.py:36-108; serve applies it, default mode 'intersection'):
     per-base range = [min, max] observed ROW bucket with partitions unioned
     within a base; 'intersection' = max-of-firsts/min-of-lasts over base
     ranges, 'strict' = same over per-partition (full series id) ranges,
-    'union' = min-of-firsts/max-of-lasts. All ranges come from ONE grouped
-    aggregation over the unioned long frames (partial agg map-side, one
-    shuffle on the tiny id domain)."""
+    'union' = min-of-firsts/max-of-lasts. The ranges fold the per-series
+    first/last buckets of the series probe (every scalar and sequence
+    series) in Python."""
     if window_mode not in {"union", "intersection", "strict"}:
         raise ValueError(
             f"window_mode must be union|intersection|strict, got {window_mode!r}"
         )
     group = "series_id" if window_mode == "strict" else "base_id"
-    slim = None
-    for _spec, long_df in spec_longs:
-        s = long_df.select(
-            F.col(group).alias("gid"),
-            floor_time_expr("time", cadence).alias("bucket"),
-        )
-        slim = s if slim is None else slim.unionByName(s)
-    rows = (
-        slim.groupBy("gid")
-        .agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
-        .collect()
-    )
-    bounds = [(r["lo"], r["hi"]) for r in rows if r["lo"] is not None]
+    ranges: dict[str, tuple] = {}
+    for r in probe:
+        if r["first"] is None:
+            continue
+        lo, hi = ranges.get(r[group], (r["first"], r["last"]))
+        ranges[r[group]] = (min(lo, r["first"]), max(hi, r["last"]))
+    bounds = list(ranges.values())
     if not bounds:
         return wide
     if window_mode == "union":
@@ -177,49 +226,36 @@ def _build(
     cadence = cfg.sample.cadence
 
     specs = [(s, "feature") for s in cfg.features] + [(s, "target") for s in cfg.targets]
-    scalar_longs: list[DataFrame] = []
-    seq_longs: list[DataFrame] = []
-    spec_longs: list = []
-    for spec, _kind in specs:
-        long_df = _long_frame(compiled, spec, keys)
-        spec_longs.append((spec, long_df))
-        (seq_longs if spec.sequence is not None else scalar_longs).append(long_df)
+    seq_bases = {s.id for s, _ in specs if s.sequence is not None}
+    # the series cache: each long frame computed once, read by every step below
+    scalar_long = _materialize(
+        [_long_frame(compiled, s, keys) for s, _ in specs if s.id not in seq_bases]
+    )
+    seq_long = _materialize(
+        [_long_frame(compiled, s, keys) for s, _ in specs if s.id in seq_bases]
+    )
+    probe = _series_probe(
+        [f for f in (scalar_long, seq_long) if f is not None], cadence, keys
+    )
+    scalar_probe = [r for r in probe if r["base_id"] not in seq_bases]
+    seq_probe = [r for r in probe if r["base_id"] in seq_bases]
 
     col_base: dict[str, str] = {}
     col_kind: dict[str, str] = {}
 
-    def union_all(frames: list[DataFrame]) -> DataFrame | None:
-        out = None
-        for f in frames:
-            out = f if out is None else out.unionByName(f)
-        return out
-
     wide: DataFrame | None = None
     list_conform: dict[str, int] = {}
-    scalar_long = union_all(scalar_longs)
-    base_of_scalar: dict[str, str] = {}
     if scalar_long is not None:
-        ids = _series_ids(scalar_long)
+        ids = _series_ids(scalar_probe)
         for sid in ids:
-            base = sid.split("__", 1)[0]
-            col_base[sid] = base
-            base_of_scalar[sid] = base
+            col_base[sid] = sid.split("__", 1)[0]
         # ---- bucket multiplicity: a series whose buckets hold >1 observation
         # becomes a fixed-length list column, time-ordered within the bucket
         # (reference operations/artifacts/series.py:336-367 _assemble_values:
         # len != 1 → list; artifacts/utils.py:54-82 enforces ONE kind and ONE
-        # length per series). Plan-time decision from one aggregation.
-        mult = (
-            scalar_long.groupBy(
-                floor_time_expr("time", cadence).alias("__b__"), *keys, "series_id"
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .groupBy("series_id")
-            .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
-            .collect()
-        )
-        multi_len = {r["series_id"]: r["hi"] for r in mult if r["hi"] > 1}
-        for r in mult:
+        # length per series). Plan-time decision from the series probe.
+        multi_len = {r["series_id"]: r["hi"] for r in scalar_probe if r["hi"] > 1}
+        for r in scalar_probe:
             if r["hi"] > 1 and r["lo"] != r["hi"]:
                 raise ValueError(
                     f"Series {r['series_id']!r} mixes bucket multiplicities "
@@ -238,9 +274,8 @@ def _build(
         # conform too
         list_conform.update(multi_len)
 
-    if seq_longs:
-        seq_long = union_all(seq_longs)
-        ids = _series_ids(seq_long)
+    if seq_long is not None:
+        ids = _series_ids(seq_probe)
         for sid in ids:
             col_base[sid] = sid.split("__", 1)[0]
         seq_wide = assemble_samples(seq_long, cadence, keys, series_ids=ids)
@@ -264,7 +299,7 @@ def _build(
     if window_mode is None and cfg.metadata is not None:
         window_mode = cfg.metadata.window_mode
     if window_mode is not None:
-        wide = _window_clip(wide, cadence, spec_longs, window_mode)
+        wide = _window_clip(wide, probe, window_mode)
     # ---- rectangular key lattice (reference sample/input.py:37 rectangular
     # =True on every serve: pipelines/sample/keys.py:16-121 dense lattice) —
     # every cadence tick inside each sample key's observed [first, last]
@@ -272,13 +307,15 @@ def _build(
     # from the (already window-clipped) assembled samples, matching the
     # metadata sample-domain plan.
     wide = rectangular_samples(wide, cadence, keys)
-    for sid, length in sorted(list_conform.items()):
-        wide = wide.withColumn(
-            sid,
-            F.coalesce(
-                F.col(sid),
-                F.array(*[F.lit(None).cast("double") for _ in range(length)]),
-            ),
+    if list_conform:
+        wide = wide.withColumns(
+            {
+                sid: F.coalesce(
+                    F.col(sid),
+                    F.array(*[F.lit(None).cast("double") for _ in range(length)]),
+                )
+                for sid, length in sorted(list_conform.items())
+            }
         )
     kind_of = {s.id: k for s, k in specs}
     for col, base in col_base.items():
@@ -358,19 +395,18 @@ def _build(
                     train_filter=F.col(LABEL).isin(roles["train"]),
                 ).withColumn("fold", F.lit(fold_id))
                 per_fold.append(s)
-            stats = union_all(per_fold)
+            stats = _union_all(per_fold)
         else:
             stats = fit_scaler(
                 labeled, id_col="series_id", train_filter=F.col(LABEL) == "train"
             )
 
-    build = DatasetBuild(
+    return DatasetBuild(
         samples=wide,
         feature_columns=sorted(feature_cols),
         target_columns=sorted(target_cols),
         column_base=col_base,
         scaler_stats=stats,
         fold_plan=fold_plan,
+        scaled_bases=scaled_bases,
     )
-    build._scaled_bases = scaled_bases
-    return build

@@ -75,6 +75,27 @@ def test_build_then_skip(spark, project):
     }
 
 
+def _job_mark(spark) -> int:
+    """Jobs started so far (job ids are dense), after the listener bus has
+    delivered every event to the status tracker."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids) + 1 if ids else 0
+
+
+def test_fresh_artifacts_launch_no_jobs(spark, project):
+    """A fingerprint skip never opens the stored artifact: a second build
+    with every artifact fresh launches no Spark job at all."""
+    from datapipeline_spark.plans.artifacts import build_artifacts
+
+    build_artifacts(_compiled(spark, project))
+    compiled = _compiled(spark, project)
+    before = _job_mark(spark)
+    r = build_artifacts(compiled)
+    assert all(res.skipped for res in r.values())
+    assert _job_mark(spark) - before == 0
+
+
 def test_series_artifact_contents(spark, project):
     from datapipeline_spark.plans.artifacts import ArtifactStore, build_artifacts
 

@@ -306,6 +306,67 @@ def test_window_modes(spark, project):
     assert hours("union") == [0, 1, 2, 3, 4, 5]
 
 
+def test_window_clip_matches_grouped_ranges(spark, project):
+    """The window bounds now fold the series probe's per-series first/last
+    buckets in Python; each mode must clip exactly where a direct grouped
+    min/max over the long frames (by base id, by series id for strict)
+    puts the window. South humidity covers hours 3-5 only, so the three
+    modes clip differently."""
+    from pyspark.sql import functions as F
+
+    from datapipeline_spark.functions.time import floor_time_expr
+    from datapipeline_spark.plans import compile_project, load_project
+    from datapipeline_spark.plans.dataset_build import (
+        _long_frame,
+        _series_probe,
+        _window_clip,
+    )
+
+    (project / "data" / "humidity.jsonl").write_text(
+        "\n".join(
+            json.dumps(
+                {"time": f"2024-03-01T{h:02d}:00:00Z", "location": p, "value": v}
+            )
+            for h, p, v in HUMIDITY
+            if p == "north" or h >= 3
+        ),
+        encoding="utf-8",
+    )
+    compiled = compile_project(spark, load_project(project))
+    cfg = compiled.definition.dataset
+    longs = [_long_frame(compiled, s, []) for s in [*cfg.features, *cfg.targets]]
+    probe = _series_probe(longs, "1h", [])
+    hours = spark.range(8).select(
+        F.timestamp_seconds(F.lit(1709251200) + F.col("id") * 3600).alias("time")
+    )  # 2024-03-01T00:00Z + 0..7 h
+    all_times = sorted(r["time"] for r in hours.collect())
+
+    clipped = {}
+    for mode, group in (
+        ("union", "base_id"),
+        ("intersection", "base_id"),
+        ("strict", "series_id"),
+    ):
+        slim = None
+        for lf in longs:
+            s = lf.select(group, floor_time_expr("time", "1h").alias("b"))
+            slim = s if slim is None else slim.unionByName(s)
+        ranges = slim.groupBy(group).agg(F.min("b"), F.max("b")).collect()
+        los = [r[1] for r in ranges if r[1] is not None]
+        his = [r[2] for r in ranges if r[1] is not None]
+        start, end = (
+            (min(los), max(his)) if mode == "union" else (max(los), min(his))
+        )
+        got = sorted(r["time"] for r in _window_clip(hours, probe, mode).collect())
+        assert got == [t for t in all_times if start <= t <= end], mode
+        clipped[mode] = [t.hour for t in got]
+    assert clipped == {
+        "union": [0, 1, 2, 3, 4, 5],
+        "intersection": [0, 1, 2, 3, 4],
+        "strict": [3, 4],
+    }
+
+
 def test_full_regression_golden(spark, project):
     from datapipeline_spark.plans import compile_project, load_project
     from datapipeline_spark.plans.dataset_build import build_dataset

@@ -329,6 +329,77 @@ def test_fusion_dataset_folds_and_leakage_free_scaler(spark, fusion_project):
     assert val[0][2] == pytest.approx((44.0 - mean) / std)
 
 
+def test_dataset_outputs_read_materialized_series(spark, fusion_project):
+    """The long series frame is materialized once per build: every fold
+    output plans over the checkpointed rows (`Scan ExistingRDD`) and never
+    re-scans a source file to re-derive the stream graph."""
+    from datapipeline_spark.plans import compile_project, load_project
+    from datapipeline_spark.plans.dataset_build import build_dataset
+
+    outs = build_dataset(compile_project(spark, load_project(fusion_project))).outputs()
+    assert len(outs) == 3
+    for key, df in outs.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" in plan, key
+        assert "FileScan" not in plan, key
+
+
+def test_bucket_multiplicity_is_checked_per_series(spark, tmp_path):
+    """Two partitions of one base hold 2 and 1 observations per bucket: each
+    series keeps its own kind (a list of 2, a scalar). One extra observation
+    makes the scalar series mix multiplicities, which the build rejects."""
+    from datapipeline_spark.plans import compile_project, load_project
+    from datapipeline_spark.plans.dataset_build import build_dataset
+
+    root = tmp_path / "mult"
+    data = [
+        {"time": f"2024-01-01T{h:02d}:{m:02d}:00Z", "loc": "x", "value": float(h + m)}
+        for h in range(3)
+        for m in (10, 40)
+    ] + [
+        {"time": f"2024-01-01T{h:02d}:00:00Z", "loc": "y", "value": float(h)}
+        for h in range(3)
+    ]
+    _write(root / "project.yaml", "schema_version: 3\nname: mult\n")
+    _write(
+        root / "sources" / "m.yaml",
+        """id: src.m
+parser: { entrypoint: core.temporal_record }
+loader: { transport: fs, path: data/m.jsonl, reader: { format: jsonl } }
+""",
+    )
+    _write(
+        root / "streams" / "m.yaml",
+        """id: s.m
+from: { source: src.m }
+partition_by: [loc]
+""",
+    )
+    _write(
+        root / "dataset.yaml",
+        """sample: { cadence: 1h }
+features:
+  - { id: v, stream: s.m, field: value }
+""",
+    )
+
+    def build(records):
+        _write(root / "data" / "m.jsonl", "\n".join(json.dumps(r) for r in records))
+        return build_dataset(compile_project(spark, load_project(root)))
+
+    out = build(data).outputs()[("all", "full")].orderBy("time").collect()
+    assert [list(r["v__@loc:x"]) for r in out] == [
+        [10.0, 40.0],
+        [11.0, 41.0],
+        [12.0, 42.0],
+    ]
+    assert [r["v__@loc:y"] for r in out] == [0.0, 1.0, 2.0]
+
+    extra = {"time": "2024-01-01T01:30:00Z", "loc": "y", "value": 9.0}
+    with pytest.raises(ValueError, match=r"'v__@loc:y' mixes bucket multiplicities 1 and 2"):
+        build(data + [extra])
+
+
 def test_unknown_stream_reference_fails(tmp_path):
     from datapipeline_spark.plans import load_project
 
